@@ -60,6 +60,9 @@ class GraftSession(val spark: SparkSession) {
   private def trackCache(df: DataFrame): Unit = queryCaches.add(df)
 
   def releaseQueryCaches(): Unit = {
+    // cached plans read the released subtrees, recomputing them on every
+    // run: drop them too, so a repeat re-plans and re-caches
+    synchronized(planCache.clear())
     var df = queryCaches.poll()
     while (df != null) {
       // blocking: the async default removes blocks AFTER this returns,
@@ -77,10 +80,14 @@ class GraftSession(val spark: SparkSession) {
     * triplet/node-rel table; once a (srcLabels, relType, dstLabels) shape
     * has been planned `threshold` times against the same graph, the
     * session materializes that triplet (persisted MEMORY_AND_DISK) and
-    * routes subsequent queries through a graph that carries it — hot
-    * traversals drop from rel-join + node-join to a single probe.
-    * `maxTables` caps session memory. Opt-in: consolidation trades
-    * executor storage for join elimination, which is the caller's call. */
+    * plans every NEW query over the graph against a twin that carries it
+    * — hot traversals drop from rel-join + node-join to a single probe.
+    * Plan-cache hits keep the plan they were built with: an exact repeat
+    * re-runs its finished DataFrame (reused shuffle stages and
+    * broadcasts) instead of re-planning onto the table and paying for
+    * its materialization. `maxTables` caps session memory. Opt-in:
+    * consolidation trades executor storage for join elimination, which
+    * is the caller's call. */
   private case class ConsolidationConfig(threshold: Int, maxTables: Int,
       storageLevel: org.apache.spark.storage.StorageLevel,
       compressed: Option[Boolean], maxRowEstimate: Long)
@@ -120,11 +127,15 @@ class GraftSession(val spark: SparkSession) {
 
   def disableAutoConsolidation(): Unit = consolidation = None
 
-  /** drop all auto-materialized pattern tables and their cached storage. */
-  def releaseAutoConsolidation(): Unit = {
+  /** drop all auto-materialized pattern tables and their cached storage,
+    * with every cached plan: a plan built on an adapted twin reads the
+    * tables dropped here and would recompute them on every run. */
+  def releaseAutoConsolidation(): Unit = synchronized {
+    planCache.clear()
     adaptedGraphs.values.foreach { g =>
-      g.tripletTables.foreach(_.df.unpersist())
-      g.nodeRelTables.foreach(_.df.unpersist())
+      // blocking, as in releaseQueryCaches
+      g.tripletTables.foreach(_.df.unpersist(blocking = true))
+      g.nodeRelTables.foreach(_.df.unpersist(blocking = true))
     }
     adaptedGraphs.clear()
     expandMisses.clear()
@@ -241,19 +252,23 @@ class GraftSession(val spark: SparkSession) {
   /** Plan cache for the tabular entry point: parse + plan + DataFrame
     * analysis costs 100-500 ms of driver time on complex patterns
     * (measured: c31 560 ms, c13 290 ms), which dominates warm repeated
-    * queries. Keyed by (graph, its adapted twin, query, params) with
-    * identity semantics on the graphs. Reuse is safe: the DataFrame is an
-    * immutable plan re-optimized per action, so date()/datetime() still
-    * evaluate per execution. Expand-miss shapes recorded during the
-    * original planning REPLAY on every hit, so auto-consolidation
-    * thresholds still trip; once a shape materializes, `adapted(g)`
-    * changes identity and the stale entry simply never matches again. */
+    * queries. Keyed by (graph the caller named, query, params,
+    * checkpoint dir) with identity semantics on the graph, so registering
+    * a new graph under an old name misses. A hit returns the same
+    * DataFrame, whose finished shuffle stages and broadcasts Spark
+    * reuses. Reuse is safe: the DataFrame is an immutable plan, so
+    * date()/datetime() still evaluate per execution. Auto-consolidation
+    * does not invalidate entries: a hit keeps its plan even after a
+    * shape it expands materializes (pattern tables serve new queries;
+    * an exact repeat is already cheaper than re-planning onto a table
+    * that must first be built). Expand-miss shapes recorded during the
+    * original planning REPLAY on every hit, so thresholds still trip.
+    * [[releaseAutoConsolidation]] and [[releaseQueryCaches]] clear it. */
+  private type PlanKey = (PropertyGraph, String, Map[String, Any], Option[String])
   private val planCache = new java.util.LinkedHashMap[
-      (PropertyGraph, PropertyGraph, String, Map[String, Any], Option[String]),
-      (DataFrame, List[(Set[String], String, Set[String])])](16, 0.75f, true) {
+      PlanKey, (DataFrame, List[(Set[String], String, Set[String])])](16, 0.75f, true) {
     override def removeEldestEntry(e: java.util.Map.Entry[
-        (PropertyGraph, PropertyGraph, String, Map[String, Any], Option[String]),
-        (DataFrame, List[(Set[String], String, Set[String])])]): Boolean =
+        PlanKey, (DataFrame, List[(Set[String], String, Set[String])])]): Boolean =
       size() > 64
   }
 
@@ -264,7 +279,7 @@ class GraftSession(val spark: SparkSession) {
     // the checkpoint-dir knob is baked into a planned deep var-length
     // query (its frontier materializations already happened), so a knob
     // change must miss the plan cache
-    val key = (g, adapted(g), query, params,
+    val key = (g, query, params,
       spark.conf.getOption(Planner.CheckpointDirKey))
     val hit = planCache.get(key)
     if (hit != null) {

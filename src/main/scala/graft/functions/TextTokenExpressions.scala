@@ -281,13 +281,18 @@ case class ArrayCountEq(left: Expression, right: Expression)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
+      // fresh names: with non-nullable inputs nullSafeCodeGen emits this
+      // straight into the enclosing scope, next to any sibling instance
+      val n = ctx.freshName("n")
+      val c = ctx.freshName("c")
+      val i = ctx.freshName("i")
       s"""
-         |int n = $a.numElements();
-         |int c = 0;
-         |for (int i = 0; i < n; i++) {
-         |  if ($b.equals($a.getUTF8String(i))) c++;
+         |int $n = $a.numElements();
+         |int $c = 0;
+         |for (int $i = 0; $i < $n; $i++) {
+         |  if ($b.equals($a.getUTF8String($i))) $c++;
          |}
-         |${ev.value} = c;
+         |${ev.value} = $c;
        """.stripMargin
     })
 

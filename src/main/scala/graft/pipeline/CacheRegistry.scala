@@ -17,14 +17,14 @@ final class CacheRegistry(track: Boolean = true) {
 
   private[graft] def persist(df: DataFrame): DataFrame = {
     // storageLevel consults the CacheManager by canonicalized plan, so an
-    // equivalent frame persisted earlier (this registry or another) short-
-    // circuits instead of re-registering ("already cached" warning spam)
-    if (df.storageLevel != StorageLevel.NONE) df
-    else {
-      val p = df.persist(StorageLevel.MEMORY_AND_DISK)
-      if (track) entries.add(p)
-      p
-    }
+    // equivalent frame persisted earlier (this registry or another) is not
+    // re-registered ("already cached" warning spam) — but it is still
+    // tracked: release() must drop what this registry's caller reads,
+    // whoever persisted the aliased plan first
+    val p = if (df.storageLevel != StorageLevel.NONE) df
+      else df.persist(StorageLevel.MEMORY_AND_DISK)
+    if (track) entries.add(p)
+    p
   }
 
   /** tracked entries, without draining (test/diagnostic visibility). */
@@ -33,11 +33,13 @@ final class CacheRegistry(track: Boolean = true) {
     entries.iterator().asScala.toSeq
   }
 
-  /** unpersist every tracked entry (blocking=false: lazily dropped). */
+  /** unpersist every tracked entry. Blocking, as in
+    * `GraftSession.releaseQueryCaches`: the async form removes blocks
+    * after this returns, racing the next query. */
   def release(): Unit = {
     var df = entries.poll()
     while (df != null) {
-      df.unpersist(blocking = false)
+      df.unpersist(blocking = true)
       df = entries.poll()
     }
   }

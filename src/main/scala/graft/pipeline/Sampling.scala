@@ -165,8 +165,7 @@ object Sampling {
     * (bucket offset + intra-bucket cumulative) fits. Deterministic across
     * engines/runs/partitionings via the md5 shuffle key. */
   def takeTokenBudget(df: DataFrame, idCol: String, textCol: String,
-      budget: Long, seed: String = "42", bucketChars: Int = 4,
-      caches: CacheRegistry = CacheRegistry.lru): DataFrame = {
+      budget: Long, seed: String = "42", bucketChars: Int = 4): DataFrame = {
     require(budget >= 0, "budget must be non-negative")
     import org.apache.spark.sql.expressions.Window
     val nTokens = graft.functions.TextFunctions
@@ -177,16 +176,12 @@ object Sampling {
       .withColumn("@key",
         md5(concat(idStr(col(idCol)), lit(":" + seed))))
       .withColumn("@bucket", substring(col("@key"), 1, bucketChars))
-    // the totals pass reads a persisted narrow (@bucket, n_tokens)
-    // projection (~16 bytes/row) instead of re-scanning the text column
-    // and re-deriving tokenize+md5 — the quantileBins compromise
-    // (round 11): aggregate passes on the narrow persist, the FINAL pass
-    // stays on the original frame, so there is no join-back by id that
-    // could drop null-id rows or multiply duplicate ids (the round-10
-    // revert hazard).
-    val narrow = caches.persist(
-      keyed.select(col("@bucket"), col("n_tokens")))
-    val totals = narrow.groupBy("@bucket").agg(sum(col("n_tokens")).as("@t"))
+    // the totals pass is read once (driverOffsets collects it eagerly),
+    // so it aggregates straight off `keyed` — a persist would only add a
+    // cache write. The FINAL pass stays on the original frame, so there
+    // is no join-back by id that could drop null-id rows or multiply
+    // duplicate ids (the round-10 revert hazard).
+    val totals = keyed.groupBy("@bucket").agg(sum(col("n_tokens")).as("@t"))
     // prefix sums over the per-bucket AGGREGATE rows (≤ 16^bucketChars,
     // never the corpus) — driver-computed + re-broadcast, see driverOffsets
     val (offsets, _) = driverOffsets(totals, "@bucket", "@t")
@@ -232,8 +227,11 @@ object Sampling {
       .withColumn("@key",
         md5(concat(idStr(col(idCol)), lit(":" + seed))))
       .withColumn("@bucket", substring(col("@key"), 1, bucketChars))
-    // narrow persist for the totals pass — same shape and rationale as
-    // takeTokenBudget (final pass stays on the original frame)
+    // the totals pass reads a persisted narrow (source, @bucket,
+    // n_tokens) projection instead of re-scanning the text column and
+    // re-deriving tokenize+md5: the offsets stay lazy here, so every
+    // action on the result re-reads the totals. The FINAL pass stays on
+    // the original frame (no join-back by id — see takeTokenBudget)
     val narrow = caches.persist(
       keyed.select(col(sourceCol), col("@bucket"), col("n_tokens")))
     val totals = narrow.groupBy(col(sourceCol), col("@bucket"))

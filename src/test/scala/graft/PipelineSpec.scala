@@ -1069,6 +1069,20 @@ class PipelineSpec extends AnyFunSuite {
       "release() must unpersist every tracked entry")
   }
 
+  test("cache registry tracks and releases a frame aliased by an earlier persist") {
+    // another caller (the untracked lru default) persists an equivalent
+    // plan first: the tracked registry must still own and release it
+    val narrow = docs.select(col("doc_id"), length(col("text")).as("len"))
+    CacheRegistry.lru.persist(narrow)
+    val reg = new CacheRegistry()
+    val aliased = reg.persist(
+      docs.select(col("doc_id"), length(col("text")).as("len")))
+    assert(reg.tracked.size == 1)
+    assert(aliased.storageLevel != org.apache.spark.storage.StorageLevel.NONE)
+    reg.release()
+    assert(narrow.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
+  }
+
   test("token-share mixture respects per-source budgets deterministically") {
     val total = 2000L
     val shares = Map("src0" -> 0.4, "src1" -> 0.3)

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 import graft.functions.{TextFunctions, TokenMode}
 
@@ -104,6 +105,51 @@ class TextKernelSpec extends AnyFunSuite {
       val exp: Any = if (r.isNullAt(0)) null else r.getInt(0)
       val act: Any = if (r.isNullAt(1)) null else r.getInt(1)
       assert(exp == act, s"$exp vs $act")
+    }
+  }
+
+  test("two array_count_eq in one codegen projection compile and agree") {
+    // non-nullable inputs (spark.range, non-null concat, literal terms):
+    // nullSafeCodeGen then emits each instance's loop into the SAME scope,
+    // so fixed local names would collide and janino would fall back
+    // a fresh frame per run: an executed Dataset keeps its physical plan
+    def counts(): Seq[(Int, Int)] = spark.range(200).select(
+      split(concat(lit("a1 b "), col("id").cast("string"), lit(" a1")),
+        " ").as("w"))
+      .select(
+        TextFunctions.array_count_eq(col("w"), lit("a1")).as("x"),
+        TextFunctions.array_count_eq(col("w"), lit("7")).as("y"))
+      .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-codegen-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(capture)
+    val compiled =
+      try counts()
+      finally { root.removeAppender(capture); capture.stop() }
+    assert(!logged.asScala.exists(_.contains("Failed to compile")),
+      logged.asScala.mkString("\n"))
+    val interpreted = withConf(
+        "spark.sql.codegen.wholeStage" -> "false",
+        "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(counts())
+    assert(compiled == interpreted)
+    assert(compiled == (0L until 200L).map(id => (2, if (id == 7) 1 else 0)))
+  }
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val prior = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prior.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -58,6 +58,16 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def sameResults(q: String): Unit =
     assert(rows(withT, q) === rows(plain, q), s"triplet divergence for:\n$q")
 
+  // distinct query texts over the consolidation tests' hot shapes, with
+  // the same answers: a new query plans against the adapted twin, while
+  // a plan-cache hit keeps the plan it was built with
+  private val sameShape =
+    """MATCH (p:Person)-[:LIVES_IN]->(x:City)
+      |RETURN p.name AS an, x.city AS cc ORDER BY an""".stripMargin
+  private val oneSideSameShape =
+    """MATCH (y)-[:LIVES_IN]->(d:City)
+      |RETURN d.city AS cc ORDER BY cc""".stripMargin
+
   test("fresh-start expand: identical results, zero-join plan") {
     val q = """MATCH (a:Person)-[k:KNOWS]->(b:Person)
               |RETURN a.name AS an, k.since AS since, b.name AS bn
@@ -166,13 +176,17 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = """MATCH (a:Person)-[:LIVES_IN]->(c:City)
               |RETURN a.name AS an, c.city AS cc ORDER BY an""".stripMargin
     val expected = rows(plain, q)
+    val planned = gs.cypher(plain, q)
     gs.enableAutoConsolidation(threshold = 2)
     try {
       // two planning passes over the same shape trip the threshold;
       // results stay identical before, at, and after consolidation
       assert(rows(plain, q) === expected)
       assert(rows(plain, q) === expected)
-      val df = gs.cypher(plain, q)
+      // an exact repeat keeps its plan; a NEW query over the hot shape
+      // plans against the pattern table
+      assert(gs.cypher(plain, q) eq planned)
+      val df = gs.cypher(plain, sameShape)
       val plan = df.queryExecution.executedPlan.toString
       val aboveCache = plan.split("InMemoryRelation").head
       assert(aboveCache.contains("InMemoryTableScan"),
@@ -195,11 +209,13 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
     // node-rel hit and must promote to a full triplet — which then wins
     // the table lookup and drops the src-scan join entirely
     val covered = plain.withNodeRel("LIVES_IN", Set("City"), nodeOnSrc = false)
+    val planned = gs.cypher(covered, q)
     gs.enableAutoConsolidation(threshold = 2)
     try {
       assert(rows(covered, q) === expected)
       assert(rows(covered, q) === expected)
-      val df = gs.cypher(covered, q)
+      assert(gs.cypher(covered, q) eq planned)
+      val df = gs.cypher(covered, sameShape)
       val plan = df.queryExecution.executedPlan.toString
       val aboveCache = plan.split("InMemoryRelation").head
       assert(aboveCache.contains("InMemoryTableScan"),
@@ -218,11 +234,13 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
               |RETURN a.name AS an, c.city AS cc ORDER BY an""".stripMargin
     val expected = rows(plain, q)
     // LIVES_IN has 3 rels; a 1-row budget must refuse to materialize
+    val planned = gs.cypher(plain, q)
     gs.enableAutoConsolidation(threshold = 2, maxRowEstimate = 1L)
     try {
       assert(rows(plain, q) === expected)
       assert(rows(plain, q) === expected)
       val df = gs.cypher(plain, q)
+      assert(df eq planned)
       // the shape took the skip branch (mutually exclusive with
       // materializing an adapted graph) and recorded the over-budget
       // estimate; results are untouched. No plan assertion: the
@@ -241,12 +259,14 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = """MATCH (a:Person)-[:LIVES_IN]->(c:City)
               |RETURN a.name AS an, c.city AS cc ORDER BY an""".stripMargin
     val expected = rows(plain, q)
+    val planned = gs.cypher(plain, q)
     gs.enableAutoConsolidation(threshold = 2,
       storageLevel = org.apache.spark.storage.StorageLevel.DISK_ONLY)
     try {
       assert(rows(plain, q) === expected)
       assert(rows(plain, q) === expected)
-      val df = gs.cypher(plain, q)
+      assert(gs.cypher(plain, q) eq planned)
+      val df = gs.cypher(plain, sameShape)
       val plan = df.queryExecution.executedPlan.toString
       assert(plan.contains("StorageLevel(disk, 1 replicas)"),
         s"expected DISK_ONLY auto table:\n$plan")
@@ -285,11 +305,13 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
     val q = """MATCH (x)-[:LIVES_IN]->(c:City)
               |RETURN c.city AS cc ORDER BY cc""".stripMargin
     val expected = rows(plain, q)
+    val planned = gs.cypher(plain, q)
     gs.enableAutoConsolidation(threshold = 2)
     try {
       assert(rows(plain, q) === expected)
       assert(rows(plain, q) === expected)
-      val df = gs.cypher(plain, q)
+      assert(gs.cypher(plain, q) eq planned)
+      val df = gs.cypher(plain, oneSideSameShape)
       val plan = df.queryExecution.executedPlan.toString
       val aboveCache = plan.split("InMemoryRelation").head
       assert(aboveCache.contains("InMemoryTableScan"),
@@ -299,6 +321,52 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
       gs.disableAutoConsolidation()
       gs.releaseAutoConsolidation()
     }
+  }
+
+  test("releaseAutoConsolidation drops plans built on the adapted twin") {
+    def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cachedRdds
+    // a KNOWS dst-side node-rel: a shape no other cached table aliases
+    val q = """MATCH (x)-[:KNOWS]->(b:Person)
+              |RETURN b.name AS bn ORDER BY bn""".stripMargin
+    val onTwinQ = """MATCH (y)-[:KNOWS]->(p:Person)
+                    |RETURN p.name AS bn ORDER BY bn""".stripMargin
+    val expected = rows(plain, q)
+    gs.enableAutoConsolidation(threshold = 2)
+    try {
+      rows(plain, q); rows(plain, q)
+      val onTwin = gs.cypher(plain, onTwinQ)
+      assert(onTwin.queryExecution.executedPlan.toString
+        .contains("InMemoryTableScan"), "expected a node-rel read")
+      assert(onTwin.collect().toSeq.map(_.toSeq) === expected)
+      gs.releaseAutoConsolidation()
+      // re-issued after the release: planned afresh on the base graph,
+      // same rows, and no cached table left behind
+      assert(!(gs.cypher(plain, onTwinQ) eq onTwin))
+      assert(rows(plain, onTwinQ) === expected)
+      assert(cachedRdds.subsetOf(before),
+        s"cached RDDs left behind: ${cachedRdds -- before}")
+    } finally {
+      gs.disableAutoConsolidation()
+      gs.releaseAutoConsolidation()
+    }
+  }
+
+  test("a written graph registered under an old name misses the plan cache") {
+    // the session benchmark's write-then-read: CONSTRUCT, register under
+    // the same name, read it with the same text — graph identity keys
+    // the plan cache, so the read must answer from the new graph
+    val write = """MATCH (a:Person)-[:LIVES_IN]->(c:City) WHERE a.name = $n
+                  |CONSTRUCT NEW (a)-[:VISITED]->(c) RETURN GRAPH""".stripMargin
+    val read = """MATCH (a:Person)-[:VISITED]->(c:City)
+                 |RETURN a.name AS an, c.city AS cc""".stripMargin
+    def writeThenRead(name: String): Seq[Seq[Any]] = {
+      gs.register("written", gs.cypherGraph(plain, write, Map("n" -> name)))
+      gs.cypher("written", read).collect().toSeq.map(_.toSeq)
+    }
+    assert(writeThenRead("Alice") === Seq(Seq("Alice", "Berlin")))
+    assert(writeThenRead("Carol") === Seq(Seq("Carol", "Aachen")))
   }
 
   test("pattern tables round-trip through the FS source (round 8)") {

@@ -9,7 +9,10 @@ CP="$CP:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 for j in $(find /root/.cache/coursier -name 'scalatest*.jar' -o -name 'scalacheck*.jar' -o -name 'scala-parallel-collections*.jar' -o -name 'scala-parser-combinators*.jar' 2>/dev/null); do
   CP="$CP:$j"
 done
-exec java -Xmx24g \
+# Heap: SPARK_DRIVER_MEM if set, else half of RAM clamped to 2-8 GB (the
+# same formula as the tier-1 verify command in ROADMAP.md).
+HEAP="${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' </proc/meminfo 2>/dev/null || echo 2g)}"
+exec java "-Xmx$HEAP" \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
   --add-opens=java.base/java.lang.reflect=ALL-UNNAMED \
