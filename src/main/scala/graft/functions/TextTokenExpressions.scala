@@ -2,10 +2,12 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.ColumnBridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Whole-stage-codegen tokenizers for the text hot paths.
@@ -209,8 +211,9 @@ object TextKernels {
     new GenericArrayData(out)
   }
 
-  private def countUnicode(s: UTF8String): Int = {
-    val str = s.toString
+  private def countUnicode(s: UTF8String): Int = countUnicode(s.toString)
+
+  private def countUnicode(str: String): Int = {
     val len = str.length
     var n = 0
     var in = false
@@ -222,6 +225,144 @@ object TextKernels {
       i += Character.charCount(cp)
     }
     n
+  }
+
+  private val NoGrams = new Array[Long](0)
+
+  /** Word n-gram hashes in document order, one per window, repeats kept:
+    * the one tokenizer behind [[graft.functions.WordNgramHashes]] and
+    * [[graft.functions.RepetitionStats]]. Tokens are the maximal
+    * `[\p{L}\p{N}]` runs of the text lowercased under `Locale.ROOT`
+    * (so hashes do not depend on the JVM's default locale); a gram's
+    * hash folds `Hashing.hashChars(token j, seed = j)` over its n tokens.
+    * Pure ASCII text takes a byte walk that lowercases and hashes each
+    * token in place; other text is lowercased once and walked by code
+    * point, like `splitUnicode`. No regex, no token strings. */
+  def wordNgramSeq(s: UTF8String, n: Int): Array[Long] =
+    if (s.isFullAscii) asciiNgramSeq(s, n)
+    else unicodeNgramSeq(s.toString.toLowerCase(java.util.Locale.ROOT), n)
+
+  private def asciiNgramSeq(s: UTF8String, n: Int): Array[Long] = {
+    val nTok = countTokens(s, TokenMode.UnicodeAlnum)
+    if (nTok < n) return NoGrams
+    val out = new Array[Long](nTok - n + 1)
+    val ring = new Array[Long](n * n)
+    val nb = s.numBytes()
+    var t = 0
+    var start = -1
+    var i = 0
+    while (i <= nb) {
+      if (i < nb && isAsciiUnicodeWordByte(s.getByte(i))) {
+        if (start < 0) start = i
+      } else if (start >= 0) {
+        val slot = (t % n) * n
+        var j = 0
+        while (j < n) {
+          ring(slot + j) = Hashing.hashAsciiLower(s, start, i, j.toLong); j += 1
+        }
+        if (t >= n - 1) out(t - n + 1) = foldWindow(ring, t - n + 1, n)
+        t += 1
+        start = -1
+      }
+      i += 1
+    }
+    out
+  }
+
+  private def unicodeNgramSeq(str: String, n: Int): Array[Long] = {
+    val nTok = countUnicode(str)
+    if (nTok < n) return NoGrams
+    val out = new Array[Long](nTok - n + 1)
+    val ring = new Array[Long](n * n)
+    val len = str.length
+    var t = 0
+    var start = -1
+    var i = 0
+    while (i <= len) {
+      val cp = if (i < len) str.codePointAt(i) else -1
+      if (cp >= 0 && isWordCp(cp)) {
+        if (start < 0) start = i
+      } else if (start >= 0) {
+        val slot = (t % n) * n
+        var j = 0
+        while (j < n) {
+          ring(slot + j) = Hashing.hashChars(str, start, i, j.toLong); j += 1
+        }
+        if (t >= n - 1) out(t - n + 1) = foldWindow(ring, t - n + 1, n)
+        t += 1
+        start = -1
+      }
+      i += (if (cp >= 0) Character.charCount(cp) else 1)
+    }
+    out
+  }
+
+  /** the gram starting at token `first`: ring slot `tok % n` holds that
+    * token's hash under each seed 0..n-1. */
+  @inline private def foldWindow(ring: Array[Long], first: Int, n: Int): Long = {
+    var h = 0L
+    var j = 0
+    while (j < n) {
+      h = Hashing.avalanche(h ^ ring(((first + j) % n) * n + j)); j += 1
+    }
+    h
+  }
+
+  /** sorts `hs` and moves its distinct values to the front; returns how
+    * many there are. */
+  private def sortDedup(hs: Array[Long]): Int = {
+    java.util.Arrays.sort(hs)
+    var w = 0
+    var i = 0
+    while (i < hs.length) {
+      if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
+      i += 1
+    }
+    w
+  }
+
+  /** `hs` sorted and deduplicated (sorts `hs` in place). */
+  def sortedDistinct(hs: Array[Long]): Array[Long] =
+    java.util.Arrays.copyOf(hs, sortDedup(hs))
+
+  /** see [[graft.functions.WordNgramHashes]]. */
+  def wordNgramHashes(s: UTF8String, n: Int): ArrayData = {
+    val hs = wordNgramSeq(s, n)
+    UnsafeArrayData.fromPrimitiveArray(hs, Platform.LONG_ARRAY_OFFSET,
+      sortDedup(hs), 8)
+  }
+
+  /** see [[graft.functions.RepetitionStats]]: counts runs of the sorted
+    * gram sequence (distinct grams, the longest run) with no boxing. */
+  def repetitionStats(s: UTF8String, n: Int): InternalRow = {
+    val hs = wordNgramSeq(s, n)
+    val total = hs.length
+    if (total == 0) return new GenericInternalRow(Array[Any](0L, 0.0, 0.0))
+    java.util.Arrays.sort(hs)
+    var distinct = 1
+    var run = 1
+    var top = 1
+    var i = 1
+    while (i < total) {
+      if (hs(i) == hs(i - 1)) { run += 1; if (run > top) top = run }
+      else { distinct += 1; run = 1 }
+      i += 1
+    }
+    new GenericInternalRow(Array[Any](
+      total.toLong, (total - distinct).toDouble / total, top.toDouble / total))
+  }
+
+  /** how many elements of `a` occur in `sorted` (ascending, distinct),
+    * by binary search; see [[graft.functions.CountInSortedSet]]. */
+  def countInSorted(a: ArrayData, sorted: Array[Long]): Long = {
+    var c = 0L
+    var i = 0
+    val n = a.numElements()
+    while (i < n) {
+      if (java.util.Arrays.binarySearch(sorted, a.getLong(i)) >= 0) c += 1
+      i += 1
+    }
+    c
   }
 }
 

@@ -95,6 +95,20 @@ object Hashing {
     }
     avalanche(h)
   }
+  /** [[hashChars]] of the ASCII-lowercased byte slice: for pure ASCII
+    * text this equals `hashChars(s.toString.toLowerCase(Locale.ROOT), ...)`
+    * without decoding the string. */
+  @inline def hashAsciiLower(s: UTF8String, from: Int, until: Int, seed: Long): Long = {
+    var h = seed ^ 0x9E3779B185EBCA87L
+    var i = from
+    while (i < until) {
+      val b = s.getByte(i)
+      h ^= (if (b >= 'A' && b <= 'Z') b + 32 else b) * 0xC2B2AE3D27D4EB4FL
+      h = java.lang.Long.rotateLeft(h, 31) * 0x9E3779B185EBCA87L
+      i += 1
+    }
+    avalanche(h)
+  }
   @inline def avalanche(v: Long): Long = {
     var h = v
     h ^= h >>> 33; h *= 0xFF51AFD7ED558CCDL
@@ -149,7 +163,7 @@ case class SimHash64(child: Expression)
   override def prettyName: String = "simhash64"
 
   override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString.toLowerCase
+    val s = input.asInstanceOf[UTF8String].toString.toLowerCase(java.util.Locale.ROOT)
     val votes = new Array[Int](64)
     var start = -1
     var i = 0
@@ -209,38 +223,21 @@ case class ShingleHashes(child: Expression, shingleSize: Int)
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
-/** word n-gram hash set (sorted distinct) — same idea for token n-grams. */
-case class WordNgramHashes(child: Expression, n: Int)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+/** word n-gram hash set (sorted distinct) — same idea for token n-grams.
+  * Whole-stage codegen over [[TextKernels.wordNgramHashes]]: a regex-free
+  * tokenizer that hashes each token in place (see
+  * [[TextKernels.wordNgramSeq]]). Null text gives null. */
+case class WordNgramHashes(child: Expression, n: Int) extends UnaryExpression {
+  require(n >= 1, "n-gram size must be >= 1")
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "word_ngram_hashes"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString.toLowerCase
-    val toks = s.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
-    if (toks.length < n) return new GenericArrayData(Array.empty[Long])
-    val hs = new Array[Long](toks.length - n + 1)
-    var i = 0
-    while (i + n <= toks.length) {
-      var h = 0L
-      var j = 0
-      while (j < n) {
-        h = Hashing.avalanche(h ^ Hashing.hashChars(toks(i + j), 0, toks(i + j).length, j.toLong))
-        j += 1
-      }
-      hs(i) = h
-      i += 1
-    }
-    java.util.Arrays.sort(hs)
-    var w = 0
-    i = 0
-    while (i < hs.length) {
-      if (w == 0 || hs(i) != hs(w - 1)) { hs(w) = hs(i); w += 1 }
-      i += 1
-    }
-    new GenericArrayData(java.util.Arrays.copyOf(hs, w))
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.wordNgramHashes(input.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.wordNgramHashes($c, $n)")
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -248,15 +245,14 @@ case class WordNgramHashes(child: Expression, n: Int)
 /** Per-document n-gram repetition statistics in one pass (the Gopher /
   * MassiveText repetition-filter family): total n-gram count, fraction
   * of n-gram occurrences that are repeats of an earlier occurrence, and
-  * the most frequent n-gram's share. Tokenization matches
-  * [[WordNgramHashes]] (lowercase, split on non-alphanumeric runs) so
-  * the two operators agree on what a token is. Counting is a single
-  * hash-map pass over gram hashes — O(tokens) per row, not the
+  * the most frequent n-gram's share. The grams are the ones
+  * [[WordNgramHashes]] dedups — both read
+  * [[TextKernels.wordNgramSeq]] — so the two operators agree on what a
+  * token is by construction. Counting sorts the gram hashes and walks
+  * the runs: O(tokens log tokens) per row with no boxing, not the
   * O(tokens * distinct) a `transform`+`filter` higher-order-function
   * formulation would cost on long documents. */
-case class RepetitionStats(child: Expression, n: Int)
-    extends UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
+case class RepetitionStats(child: Expression, n: Int) extends UnaryExpression {
   require(n >= 1, "n-gram size must be >= 1")
   override def dataType: DataType = StructType(Seq(
     StructField("n_grams", LongType, nullable = false),
@@ -264,33 +260,12 @@ case class RepetitionStats(child: Expression, n: Int)
     StructField("top_frac", DoubleType, nullable = false)))
   override def prettyName: String = "repetition_stats"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String].toString.toLowerCase
-    val toks = s.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
-    val total = toks.length - n + 1
-    if (total <= 0)
-      return new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](0L, 0.0, 0.0))
-    val counts = new java.util.HashMap[Long, Int](total * 2)
-    var i = 0
-    var top = 0
-    while (i < total) {
-      var h = 0L
-      var j = 0
-      while (j < n) {
-        h = Hashing.avalanche(h ^ Hashing.hashChars(toks(i + j), 0, toks(i + j).length, j.toLong))
-        j += 1
-      }
-      val c = counts.merge(h, 1, (a, b) => a + b)
-      if (c > top) top = c
-      i += 1
-    }
-    val distinct = counts.size
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-      total.toLong,
-      (total - distinct).toDouble / total,
-      top.toDouble / total))
-  }
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.repetitionStats(input.asInstanceOf[UTF8String], n)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.repetitionStats($c, $n)")
 
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
@@ -400,6 +375,34 @@ case class BloomMightContainLong(child: Expression,
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
 }
 
+/** How many elements of a long array occur in a driver-broadcast sorted,
+  * distinct `long[]` — the exact membership count behind
+  * `TextAnalysis.decontaminate`. Built like [[BloomMightContainLong]]:
+  * the broadcast handle is a codegen reference object, the array is
+  * hoisted into per-partition mutable state once, and the row loop is a
+  * binary search per element ([[TextKernels.countInSorted]]). Null array
+  * gives null. */
+case class CountInSortedSet(child: Expression,
+    set: org.apache.spark.broadcast.Broadcast[Array[Long]])
+    extends UnaryExpression {
+  override def dataType: DataType = LongType
+  override def prettyName: String = "count_in_sorted_set"
+
+  override def nullSafeEval(input: Any): Any =
+    TextKernels.countInSorted(input.asInstanceOf[ArrayData], set.value)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val bcCls = classOf[org.apache.spark.broadcast.Broadcast[_]].getName
+    val setRef = ctx.addReferenceObj("gramSetBroadcast", set, bcCls)
+    val sorted = ctx.addMutableState("long[]", "gramSet",
+      v => s"$v = (long[]) (($bcCls)$setRef).value();")
+    defineCodeGen(ctx, ev,
+      c => s"graft.functions.TextKernels.countInSorted($c, $sorted)")
+  }
+
+  override protected def withNewChildInternal(c: Expression) = copy(child = c)
+}
+
 /** Identity over its child that reports `foldable = false` — hides a
   * literal list-index ordinal from ConstantFolding so an `element_at`
   * over a list LITERAL keeps evaluating every element. Cypher evaluates
@@ -456,4 +459,7 @@ object VectorFunctions {
       bf: org.apache.spark.broadcast.Broadcast[
         org.apache.spark.util.sketch.BloomFilter]): Column =
     ColumnBridge.column(BloomMightContainLong(g.toExpr, bf))
+  def count_in_sorted_set(arr: Column,
+      set: org.apache.spark.broadcast.Broadcast[Array[Long]]): Column =
+    ColumnBridge.column(CountInSortedSet(arr.toExpr, set))
 }

@@ -201,30 +201,58 @@ object TextAnalysis {
 
   /** Benchmark decontamination: flags training documents that share any
     * word n-gram with an evaluation corpus (the standard guard against
-    * eval leakage into a training set). Scale shape: the benchmark gram
-    * set is distinct-projected and broadcast — training-side grams are
-    * joined map-side and never shuffle; output is one row per training
-    * document with the contaminated-gram count. A benchmark too large to
-    * broadcast degrades gracefully to a shuffled semi-join of (id, gram)
-    * pairs — still narrow, never the document bodies. */
+    * eval leakage into a training set). Output is one row per training
+    * row — `(id, n_grams, contaminated_grams, contaminated)` — so rows
+    * that share an id are counted separately. Null text gives null
+    * `n_grams` and 0 hits.
+    *
+    * Plan: one eager Spark job with no shuffle collects the benchmark's
+    * distinct gram hashes (see [[benchGramSet]]) into a sorted `long[]`,
+    * which is broadcast. The training side is then one projection with
+    * no explode, join or shuffle: it evaluates `word_ngram_hashes` once
+    * per row and counts the row's grams found in the broadcast set by
+    * binary search (`count_in_sorted_set`). Memory: 8 bytes per
+    * distinct benchmark gram on the driver and on each executor. A
+    * benchmark too large for that takes [[decontaminateBloom]], whose
+    * filter is bounded by its false-positive rate. */
   def decontaminate(train: DataFrame, bench: DataFrame, idCol: String,
       textCol: String, n: Int = 3): DataFrame = {
-    import graft.functions.VectorFunctions.word_ngram_hashes
-    val trainGrams = train.select(col(idCol).cast(LongType).as("id"),
-      word_ngram_hashes(col(textCol), n).as("grams"))
-    val benchGrams = bench
-      .select(explode(word_ngram_hashes(col(textCol), n)).as("gram"))
-      .distinct()
-    val hits = trainGrams.select(col("id"), explode(col("grams")).as("gram"))
-      .join(broadcast(benchGrams), Seq("gram"))
-      .groupBy("id").agg(count(lit(1)).as("hits"))
-    trainGrams
-      .select(col("id"), size(col("grams")).cast(LongType).as("n_grams"))
-      .join(hits, Seq("id"), "left")
+    import graft.functions.VectorFunctions.{count_in_sorted_set, word_ngram_hashes}
+    val benchSet = train.sparkSession.sparkContext.broadcast(
+      benchGramSet(bench, textCol, n))
+    // CollapseProject keeps `grams` and `contaminated_grams` in their own
+    // projections because each is read twice, so whole-stage codegen
+    // evaluates the kernel once per row
+    train.select(col(idCol).cast(LongType).as("id"),
+        word_ngram_hashes(col(textCol), n).as("grams"))
       .select(col("id"),
-        col("n_grams"),
-        coalesce(col("hits"), lit(0L)).as("contaminated_grams"),
-        (coalesce(col("hits"), lit(0L)) > 0).as("contaminated"))
+        size(col("grams")).cast(LongType).as("n_grams"),
+        coalesce(count_in_sorted_set(col("grams"), benchSet), lit(0L))
+          .as("contaminated_grams"))
+      .withColumn("contaminated", col("contaminated_grams") > 0)
+  }
+
+  /** The distinct word n-gram hashes of `bench`, ascending. One Spark job
+    * with no shuffle: each partition sorts and dedups its own grams, and
+    * the driver merges the per-partition arrays. */
+  private def benchGramSet(bench: DataFrame, textCol: String, n: Int): Array[Long] = {
+    import graft.functions.TextKernels
+    import graft.functions.VectorFunctions.word_ngram_hashes
+    val perPartition = bench.select(word_ngram_hashes(col(textCol), n))
+      .queryExecution.toRdd
+      .mapPartitions { rows =>
+        val buf = new scala.collection.mutable.ArrayBuilder.ofLong
+        rows.foreach { r =>
+          if (!r.isNullAt(0)) {
+            val a = r.getArray(0)
+            var i = 0
+            while (i < a.numElements()) { buf += a.getLong(i); i += 1 }
+          }
+        }
+        Iterator.single(TextKernels.sortedDistinct(buf.result()))
+      }
+      .collect()
+    TextKernels.sortedDistinct(perPartition.flatten)
   }
 
   /** Hashed bag-of-words linear classifier — the fastText-style quality
@@ -421,9 +449,10 @@ object TextAnalysis {
   }
 
   /** Bloom-prefiltered decontamination — identical OUTPUT to
-    * [[decontaminate]] (every training doc with its shared-n-gram count
-    * against a held-out benchmark), different SCALE path: instead of
-    * broadcasting the full benchmark n-gram set into the probe join, the
+    * [[decontaminate]] when training ids are unique (every training doc
+    * with its shared-n-gram count against a held-out benchmark; rows that
+    * share an id get their summed count here), different SCALE path:
+    * instead of broadcasting the full benchmark n-gram set, the
     * benchmark grams are folded into a bloom filter (a distributed
     * aggregation; the filter itself is ~1.2 MB per million grams at 1%
     * FPP — bounded regardless of corpus size). Training grams stream

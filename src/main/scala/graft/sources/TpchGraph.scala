@@ -32,22 +32,29 @@ object TpchGraph {
     * this moves the cache to the source so every caller shares it).
     * Bounded LRU so long-lived multi-session processes don't pin
     * sessions. */
+  private type Key = (SparkSession, String, Seq[(Long, Long)])
   private val cache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[(SparkSession, String, Long), PropertyGraph](
-        16, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(SparkSession, String, Long), PropertyGraph])
+    new java.util.LinkedHashMap[Key, PropertyGraph](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Key, PropertyGraph])
           : Boolean = size > 8
     })
 
+  private val Tables =
+    Seq("customer", "orders", "lineitem", "part", "supplier", "nation", "region")
+
   def load(spark: SparkSession, dir: String): PropertyGraph = {
-    // mtime in the key (ADVICE r10): a dataset regenerated in-process
-    // (GenSf1Main overwrites these dirs) must not serve stale file
-    // listings; stopped sessions are evicted rather than LRU-pinned
+    // each table file's (mtime, length) in the key: a dataset regenerated
+    // in-process (GenSf1Main overwrites these dirs) must not serve stale
+    // file listings, and rewriting a file in place need not touch the
+    // directory's mtime; stopped sessions are evicted rather than
+    // LRU-pinned
     cache.synchronized {
       cache.entrySet().removeIf(e => e.getKey._1.sparkContext.isStopped)
     }
-    val key = (spark, dir, new java.io.File(dir).lastModified())
+    val key: Key = (spark, dir, Tables.map { t =>
+      val f = new java.io.File(s"$dir/$t.parquet")
+      (f.lastModified(), f.length())
+    })
     val hit = cache.get(key)
     if (hit != null) return hit
     val g = loadFresh(spark, dir)

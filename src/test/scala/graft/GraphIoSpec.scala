@@ -681,6 +681,60 @@ class GraphIoSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(maps.forall(_("age").isInstanceOf[Long]))
   }
 
+  test("TpchGraph cache misses when a table file is rewritten in place") {
+    import java.nio.file.{Files, Path}
+    val s = spark
+    import s.implicits._
+    val dir = Files.createTempDirectory("graft-tpch-key")
+    val staging = Files.createTempDirectory("graft-tpch-staging")
+    // TpchGraph reads each `<table>.parquet` as one file: write a table
+    // as one partition and take its part file's bytes
+    def parquetBytes(df: org.apache.spark.sql.DataFrame): Array[Byte] = {
+      val out = staging.resolve(java.util.UUID.randomUUID.toString)
+      df.coalesce(1).write.parquet(out.toString)
+      Files.readAllBytes(Files.list(out).toArray.map(_.asInstanceOf[Path])
+        .find(_.getFileName.toString.endsWith(".parquet")).get)
+    }
+    def regionTable(n: Long) = (0L until n).toDF("r_regionkey")
+    val tables = Map(
+      "customer" -> Seq((1L, 0L)).toDF("c_custkey", "c_nationkey"),
+      "orders" -> Seq((1L, 1L)).toDF("o_orderkey", "o_custkey"),
+      "lineitem" -> Seq((1L, 1, 1L, 1L, 1.0, 1.0, 0.0, 0.0, "N", "O",
+        "1995-01-01")).toDF("l_orderkey", "l_linenumber", "l_partkey",
+        "l_suppkey", "l_quantity", "l_extendedprice", "l_discount", "l_tax",
+        "l_returnflag", "l_linestatus", "l_shipdate"),
+      "part" -> Seq(1L).toDF("p_partkey"),
+      "supplier" -> Seq((1L, 0L)).toDF("s_suppkey", "s_nationkey"),
+      "nation" -> Seq((0L, 0L)).toDF("n_nationkey", "n_regionkey"),
+      "region" -> regionTable(5))
+    try {
+      tables.foreach { case (t, df) =>
+        Files.write(dir.resolve(s"$t.parquet"), parquetBytes(df)) }
+      val g1 = graft.sources.TpchGraph.load(spark, dir.toString)
+      assert(graft.sources.TpchGraph.load(spark, dir.toString) eq g1)
+      def regions(g: PropertyGraph): Long =
+        g.nodeTables.find(_.labels == Set("Region")).get.df.count()
+      assert(regions(g1) == 5)
+      // a two-row region table written over the old file's bytes (same
+      // inode, so the directory's mtime stays put)
+      val bytes = parquetBytes(regionTable(2))
+      val dirMtime = Files.getLastModifiedTime(dir)
+      val region = dir.resolve("region.parquet")
+      Files.write(region, bytes)
+      // a later mtime than the first write's, whatever the clock granularity
+      Files.setLastModifiedTime(region, java.nio.file.attribute.FileTime
+        .fromMillis(Files.getLastModifiedTime(region).toMillis + 5000))
+      Files.setLastModifiedTime(dir, dirMtime)
+      assert(Files.getLastModifiedTime(dir) == dirMtime)
+      val g2 = graft.sources.TpchGraph.load(spark, dir.toString)
+      assert(!(g2 eq g1))
+      assert(regions(g2) == 2)
+    } finally {
+      Seq(dir, staging).foreach(d => Files.walk(d).toArray
+        .map(_.asInstanceOf[Path]).reverse.foreach(Files.deleteIfExists))
+    }
+  }
+
   test("edge list source: SNAP format → V/E graph") {
     val f = java.nio.file.Files.createTempFile("graft_edges", ".txt")
     java.nio.file.Files.writeString(f,

@@ -841,6 +841,87 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.size == 3)
   }
 
+  test("decontamination: null text, short docs, non-ASCII text, empty bench") {
+    val train = Seq[(Long, Option[String])](
+      (1L, Some("the quick brown fox jumps")),
+      (2L, None),
+      (3L, Some("too short")),
+      (4L, Some("Über café naïve straße ünïcödé words")),
+      (5L, Some("")))
+      .toDF("doc_id", "text")
+    val bench = Seq[(Long, Option[String])](
+      (100L, Some("QUICK brown fox, jumps!")),
+      (101L, Some("ÜBER CAFÉ naïve STRASSE straße")),
+      (102L, None), (103L, Some("two words")))
+      .toDF("doc_id", "text")
+    def run(b: org.apache.spark.sql.DataFrame) =
+      TextAnalysis.decontaminate(train, b, "doc_id", "text", n = 3)
+        .collect().map(r => r.getLong(0) ->
+          (Option(r.get(1)), r.getLong(2), r.getBoolean(3))).toMap
+    val out = run(bench)
+    assert(out.size == 5)
+    // "quick brown fox", "brown fox jumps"
+    assert(out(1L) == ((Some(3L), 2L, true)))
+    assert(out(2L) == ((None, 0L, false)))  // null text: null n_grams
+    assert(out(3L) == ((Some(0L), 0L, false)))  // fewer than n tokens
+    // lowercased across scripts: "über café naïve"; STRASSE ≠ straße
+    assert(out(4L) == ((Some(4L), 1L, true)))
+    assert(out(5L) == ((Some(0L), 0L, false)))
+    // an empty benchmark, and one whose docs yield no grams at all
+    for (b <- Seq(bench.limit(0), bench.where($"doc_id" >= 102L))) {
+      val clean = run(b)
+      assert(clean.keySet == out.keySet)
+      assert(clean.values.forall { case (_, hits, flag) => hits == 0 && !flag })
+      assert(clean.map { case (id, v) => id -> v._1 } ==
+        out.map { case (id, v) => id -> v._1 })
+    }
+  }
+
+  test("decontamination counts each training row, even when ids repeat") {
+    val train = Seq(
+      (7L, "quick brown fox jumps over"),
+      (7L, "nothing in common here at all"),
+      (8L, "quick brown fox"))
+      .toDF("doc_id", "text")
+    val bench = Seq((100L, "quick brown fox jumps")).toDF("doc_id", "text")
+    val out = TextAnalysis.decontaminate(train, bench, "doc_id", "text", n = 3)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getBoolean(3))).sorted.toSeq
+    // one output row per input row with its own hits; the earlier
+    // join-by-id plan summed hits over rows sharing an id (2 and 2 here)
+    assert(out == Seq((7L, 3L, 2L, true), (7L, 4L, 0L, false),
+      (8L, 1L, 1L, true)))
+  }
+
+  test("decontamination plan: one kernel pass, no Generate, no Exchange " +
+      "but the caller's sort") {
+    import org.apache.spark.sql.execution.GenerateExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+      ShuffleExchangeLike}
+    val df = TextAnalysis.decontaminate(docs.where($"source" =!= "src0"),
+      docs.where($"source" === "src0"), "doc_id", "text", n = 4).orderBy("id")
+    assert(df.collect().length == docs.where($"source" =!= "src0").count())
+    val plan = df.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(plan) { case g: GenerateExec => g }.isEmpty, plan)
+    assert(helper.collect(plan) { case b: BroadcastExchangeLike => b }.isEmpty,
+      plan)
+    val shuffles = helper.collect(plan) { case e: ShuffleExchangeLike => e }
+    assert(shuffles.size == 1 && shuffles.head.outputPartitioning
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.physical.RangePartitioning],
+      plan)
+    val kernels = helper.flatMap(plan)(_.expressions.flatMap(_.collect {
+      case k: graft.functions.WordNgramHashes => k }))
+    assert(kernels.size == 1, plan)
+    // and that one projection runs inside whole-stage codegen
+    assert(helper.collect(plan) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec
+        if w.child.exists(_.expressions.exists(_.exists(
+          _.isInstanceOf[graft.functions.WordNgramHashes]))) => w
+    }.nonEmpty, plan)
+  }
+
   test("sequence packing: per-partition greedy offset binning") {
     val data = Seq(
       (1L, "a " * 300, "s1"), (2L, "b " * 300, "s1"), (3L, "c " * 300, "s1"),

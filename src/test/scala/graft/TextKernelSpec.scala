@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
-import graft.functions.{TextFunctions, TokenMode}
+import graft.functions.{Hashing, TextFunctions, TextKernels, TokenMode}
 
 /** Equivalence locks for the codegen tokenizers (round 11) against the
   * composed `filter(split(...), length > 0)` expressions they replace —
@@ -120,22 +120,8 @@ class TextKernelSpec extends AnyFunSuite {
         TextFunctions.array_count_eq(col("w"), lit("a1")).as("x"),
         TextFunctions.array_count_eq(col("w"), lit("7")).as("y"))
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
-    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "graft-codegen-capture", null, null, true,
-        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
-        logged.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val root = org.apache.logging.log4j.LogManager.getRootLogger
-      .asInstanceOf[org.apache.logging.log4j.core.Logger]
-    root.addAppender(capture)
-    val compiled =
-      try counts()
-      finally { root.removeAppender(capture); capture.stop() }
-    assert(!logged.asScala.exists(_.contains("Failed to compile")),
-      logged.asScala.mkString("\n"))
+    val (compiled, failures) = codegenFailures(counts())
+    assert(failures.isEmpty, failures.mkString("\n"))
     val interpreted = withConf(
         "spark.sql.codegen.wholeStage" -> "false",
         "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(counts())
@@ -151,6 +137,134 @@ class TextKernelSpec extends AnyFunSuite {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  /** The regex tokenizer `word_ngram_hashes` and `repetition_stats`
+    * used before their codegen kernel, kept as the reference: lowercase,
+    * split on `[^\\p{L}\\p{N}]+`, drop empty tokens, fold each gram's
+    * per-token `hashChars(token, seed = position)` in document order. */
+  private def regexNgramSeq(text: String, n: Int,
+      locale: java.util.Locale = java.util.Locale.ROOT): Array[Long] = {
+    val toks = text.toLowerCase(locale).split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
+    (0 to toks.length - n).map { i =>
+      (0 until n).foldLeft(0L) { (h, j) =>
+        val t = toks(i + j)
+        Hashing.avalanche(h ^ Hashing.hashChars(t, 0, t.length, j.toLong))
+      }
+    }.toArray
+  }
+
+  private def regexNgramHashes(text: String, n: Int): Seq[Long] =
+    regexNgramSeq(text, n).distinct.sorted.toSeq
+
+  /** the codegen-fallback log lines `body` produces */
+  private def codegenFailures[T](body: => T): (T, Seq[String]) = {
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "graft-codegen-capture", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        logged.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = org.apache.logging.log4j.LogManager.getRootLogger
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    root.addAppender(capture)
+    val out =
+      try body
+      finally { root.removeAppender(capture); capture.stop() }
+    (out, logged.asScala.filter(_.contains("Failed to compile")).toSeq)
+  }
+
+  // long ASCII and mixed texts on top of the Unicode fixtures, so that
+  // n = 5 has grams to compare
+  private lazy val ngramTexts: Seq[String] = fixtures ++ Seq(
+    "The Quick brown FOX jumps over the lazy dog, 42 times; then 42 more.",
+    "İstanbul IS İN TÜRKİYE — ıı ii II", "ǅemal ǄEMAL ǆemal ŞİŞLİ",
+    "a a a a a a a b a a a a a a", "Ⅻ ⅻ ½ ٣٤ 𝔸𝔹 ℂ ſ ß ẞ") ++
+    (0 until 150).map(_ => randomString(40))
+
+  test("word_ngram_hashes ≡ the regex reference, n = 1..5, under codegen") {
+    val s = spark
+    import s.implicits._
+    // an RDD-backed frame: a local Seq would fold into a LocalRelation
+    // and never reach generated code
+    val df = spark.sparkContext.parallelize(ngramTexts.map(Option(_)) :+ None, 4)
+      .toDF("t")
+    for (n <- 1 to 5) {
+      val q = df.select(col("t"),
+        graft.functions.VectorFunctions.word_ngram_hashes(col("t"), n).as("g"))
+      val (rows, failures) = codegenFailures(q.collect())
+      assert(failures.isEmpty, failures.mkString("\n"))
+      val plan = q.queryExecution.executedPlan.toString()
+      assert(plan.linesIterator.exists(l =>
+        l.contains("word_ngram_hashes") && l.trim.startsWith("*(")), plan)
+      assert(rows.length == ngramTexts.size + 1)
+      rows.foreach { r =>
+        if (r.isNullAt(0)) assert(r.isNullAt(1), "null text must give null")
+        else assert(r.getSeq[Long](1) == regexNgramHashes(r.getString(0), n),
+          s"n=$n mismatch on <${r.getString(0)}>")
+      }
+    }
+  }
+
+  test("repetition_stats ≡ a regex-tokenized hash-map count, under codegen") {
+    val s = spark
+    import s.implicits._
+    val df = spark.sparkContext.parallelize(ngramTexts, 4).toDF("t")
+    for (n <- 1 to 3) {
+      val q = df.select(col("t"),
+        graft.functions.VectorFunctions.repetition_stats(col("t"), n).as("r"))
+      val (rows, failures) = codegenFailures(q.collect())
+      assert(failures.isEmpty, failures.mkString("\n"))
+      rows.foreach { r =>
+        val seq = regexNgramSeq(r.getString(0), n)
+        val st = r.getStruct(1)
+        val expected =
+          if (seq.isEmpty) (0L, 0.0, 0.0)
+          else {
+            val counts = seq.groupBy(identity).values.map(_.length)
+            (seq.length.toLong,
+              (seq.length - counts.size).toDouble / seq.length,
+              counts.max.toDouble / seq.length)
+          }
+        assert((st.getLong(0), st.getDouble(1), st.getDouble(2)) == expected,
+          s"n=$n mismatch on <${r.getString(0)}>")
+      }
+    }
+  }
+
+  test("gram hashes do not depend on the JVM default locale") {
+    // under tr, String.toLowerCase turns I into dotless ı; DuckDB's
+    // lower() and Locale.ROOT do not
+    val texts = Seq("ISTANBUL IS BIG", "İstanbul Iğdır", "LIMIT I II III",
+      "ǄEMAL QUICK İ I")
+    def kernels(): Seq[Any] = texts.flatMap { t =>
+      val u = org.apache.spark.unsafe.types.UTF8String.fromString(t)
+      Seq(TextKernels.wordNgramHashes(u, 2).toLongArray().toSeq,
+        TextKernels.repetitionStats(u, 1).toSeq(Seq(
+          org.apache.spark.sql.types.LongType,
+          org.apache.spark.sql.types.DoubleType,
+          org.apache.spark.sql.types.DoubleType)),
+        graft.functions.SimHash64(
+          org.apache.spark.sql.catalyst.expressions.Literal(t)).eval())
+    }
+    val prior = java.util.Locale.getDefault
+    val (root, turkish, legacyTurkish) =
+      try {
+        java.util.Locale.setDefault(java.util.Locale.ROOT)
+        val r = kernels()
+        java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr"))
+        (r, kernels(), texts.map(t =>
+          regexNgramSeq(t, 2, java.util.Locale.getDefault).toSeq))
+      } finally java.util.Locale.setDefault(prior)
+    assert(turkish == root)
+    assert(texts.map(t => TextKernels.wordNgramHashes(
+      org.apache.spark.unsafe.types.UTF8String.fromString(t), 2)
+      .toLongArray().toSeq) == texts.map(regexNgramHashes(_, 2)))
+    // the fixture does exercise the bug: default-locale lowercasing moves
+    // the hashes under tr
+    assert(legacyTurkish != texts.map(t => regexNgramSeq(t, 2).toSeq))
   }
 
   test("replace_nth_delim ≡ split + n-token regroup + newline join") {
