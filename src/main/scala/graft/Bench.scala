@@ -50,8 +50,8 @@ object Bench {
 
   /** per-query seconds from a previous detail artifact ("queries" map),
     * for outlier re-runs — best-of-N still admits a contended triple.
-    * Only comparable at the SAME scale factor; prefers the per-core-count
-    * file (round 11, VERDICT item 6: an 8-core scaling run used to
+    * Only comparable at the SAME scale factor and core count; prefers
+    * the per-core-count file (round 11, VERDICT item 6: an 8-core scaling run used to
     * clobber the 32-core detail AND feed wrong outlier baselines). */
   private def previousBest(sfDir: String, cpus: String): Map[String, Double] = {
     val f = Seq(new java.io.File(s"BENCH_LOCAL_c$cpus.json"),
@@ -62,6 +62,10 @@ object Bench {
       val prevSf = """"sf":"([^"]*)"""".r.findFirstMatchIn(text)
         .map(_.group(1))
       if (!prevSf.contains(sfDir)) return Map.empty
+      // BENCH_LOCAL.json holds whichever core count ran last
+      val prevCpus = """"cpus":([0-9]+)""".r.findFirstMatchIn(text)
+        .map(_.group(1))
+      if (!prevCpus.contains(cpus)) return Map.empty
       val qs = """"queries":\{([^}]*)\}""".r.findFirstMatchIn(text)
         .map(_.group(1)).getOrElse(return Map.empty)
       """"([^"]+)":([0-9.Ee+-]+)""".r.findAllMatchIn(qs)

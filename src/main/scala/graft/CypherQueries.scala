@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import graft.api.GraftSession
-import graft.sources.TpchGraph
+import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
+import graft.graph.PropertyGraph
+import graft.sources.{ParquetTables, TpchGraph}
 
 /** Cypher-engine-routed operator queries for the driver's correctness gate.
   * Every entry runs through parse → plan → DataFrame (the full engine) and
@@ -16,21 +19,69 @@ import graft.sources.TpchGraph
   */
 object CypherQueries {
 
-  private val sessions = scala.collection.concurrent.TrieMap.empty[SparkSession, GraftSession]
-  private val graphs = scala.collection.concurrent.TrieMap.empty[(SparkSession, String), graft.graph.PropertyGraph]
+  /** One GraftSession per SparkSession, bounded like TpchGraph.load's
+    * cache: stopped sessions are evicted, and past [[MaxSessions]] the
+    * least recently used goes. An evicted session releases its pattern
+    * tables and query caches, which would otherwise stay pinned with it. */
+  private val MaxSessions = 8
+  private val sessions =
+    new java.util.LinkedHashMap[SparkSession, GraftSession](16, 0.75f, true)
+
+  /** the gates' session for `s`; `auto` (auto-consolidation) applies when
+    * this call creates it. Auto-consolidation on: shapes expanded >= 3
+    * times materialize a pattern table (persisted once), so repeated
+    * bench/gate queries over hot expands probe one cached scan instead of
+    * re-joining (TripletSpec locks the probe-only plan and result
+    * identity). */
+  private def session(s: SparkSession, auto: Boolean = true): GraftSession = {
+    val evicted = scala.collection.mutable.ListBuffer.empty[GraftSession]
+    val gs = sessions.synchronized {
+      sessions.entrySet().removeIf { e =>
+        val stopped = e.getKey.sparkContext.isStopped
+        if (stopped) evicted += e.getValue
+        stopped
+      }
+      val gs = sessions.computeIfAbsent(s, _ => {
+        val g = GraftSession(s); if (auto) g.enableAutoConsolidation(); g
+      })
+      if (sessions.size > MaxSessions) {
+        val eldest = sessions.entrySet().iterator()
+        evicted += eldest.next().getValue
+        eldest.remove()
+      }
+      gs
+    }
+    evicted.foreach { e =>
+      // a stopped context's storage went with it, and unpersisting
+      // through it may fail: the session is dropped either way
+      try { e.releaseAutoConsolidation(); e.releaseQueryCaches() }
+      catch { case NonFatal(_) if e.spark.sparkContext.isStopped => }
+    }
+    gs
+  }
+
+  /** the SparkSessions that currently hold a gate session */
+  private[graft] def liveSessions: Seq[SparkSession] =
+    sessions.synchronized(sessions.keySet().toArray(Array.empty[SparkSession]).toSeq)
+
+  /** Graphs a gate derives from a dataset (typed DDL, union, pattern-table
+    * twins), memoized per loaded TPC-H graph. The base graph's identity
+    * carries TpchGraph.load's key (session and each table file's
+    * identity), so a new session or a rewritten table misses; weak keys
+    * let an entry go once TpchGraph's bounded cache drops its base. */
+  private val derived = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[PropertyGraph, TrieMap[String, PropertyGraph]]())
+
+  private def derive(s: SparkSession, dir: String, tag: String)(
+      build: PropertyGraph => PropertyGraph): PropertyGraph = {
+    val base = TpchGraph.load(s, dir)
+    derived.computeIfAbsent(base, _ => TrieMap.empty)
+      .getOrElseUpdate(tag, build(base))
+  }
 
   private def run(s: SparkSession, dir: String, q: String,
-      params: Map[String, Any] = Map.empty): DataFrame = {
-    // auto-consolidation on: shapes expanded >= 3 times materialize a
-    // pattern table (persisted once), so repeated bench/gate queries over
-    // hot expands probe one cached scan instead of re-joining
-    // (TripletSpec locks the probe-only plan and result identity)
-    val gs = sessions.getOrElseUpdate(s, {
-      val g = GraftSession(s); g.enableAutoConsolidation(); g
-    })
-    val g = graphs.getOrElseUpdate((s, dir), TpchGraph.load(s, dir))
-    gs.cypher(g, q, params)
-  }
+      params: Map[String, Any] = Map.empty): DataFrame =
+    session(s).cypher(TpchGraph.load(s, dir), q, params)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // PatternScan + Filter + Select (§2.2 PatternScan, §2.1 Filter/Select)
@@ -280,13 +331,12 @@ object CypherQueries {
     // typed Graph DDL end-to-end (§2.6): element types + JOIN ON view
     // mappings build the graph, hashed join-key ids wire the expand
     "c33_typed_ddl" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, {
-        val g2 = GraftSession(s); g2.enableAutoConsolidation(); g2
-      })
-      val g = graphs.getOrElseUpdate((s, dir + "#typed_ddl"), {
-        s.read.parquet(s"$dir/customer.parquet")
+      val gs = session(s)
+      // keyed by the TPC-H graph, whose key covers customer and nation
+      val g = derive(s, dir, "typed_ddl") { _ =>
+        ParquetTables.read(s, s"$dir/customer.parquet")
           .createOrReplaceTempView("ddl_customer_v")
-        s.read.parquet(s"$dir/nation.parquet")
+        ParquetTables.read(s, s"$dir/nation.parquet")
           .createOrReplaceTempView("ddl_nation_v")
         graft.sources.TypedGraphDdl.createGraphs(s,
           """CREATE ELEMENT TYPE Customer ( c_custkey INTEGER, c_name STRING )
@@ -302,7 +352,7 @@ object CypherQueries {
             |    START NODES (Customer) FROM ddl_customer_v n JOIN ON e.c_custkey = n.c_custkey
             |    END   NODES (Nation)   FROM ddl_nation_v   n JOIN ON e.c_nationkey = n.n_nationkey
             |)""".stripMargin)("ddlg")
-      })
+      }
       gs.cypher(g,
         """MATCH (c:Customer)-[:IN_NATION]->(n:Nation)
           |RETURN n.n_name AS nn, count(*) AS cnt, min(c.c_name) AS first_c
@@ -313,11 +363,9 @@ object CypherQueries {
     // DataFrame is a bound value variable; MATCH extends its rows. The
     // value-to-property equality plans as a hash join, not a filter scan.
     "c34_driving_table" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, {
-        val g2 = GraftSession(s); g2.enableAutoConsolidation(); g2
-      })
-      val g = graphs.getOrElseUpdate((s, dir), TpchGraph.load(s, dir))
-      val driving = s.read.parquet(s"$dir/nation.parquet")
+      val gs = session(s)
+      val g = TpchGraph.load(s, dir)
+      val driving = ParquetTables.read(s, s"$dir/nation.parquet")
         .select(col("n_nationkey").as("nk"), col("n_name").as("nname"))
       gs.cypher(g,
         """MATCH (c:Customer)-[:IN_NATION]->(n:Nation)
@@ -329,12 +377,10 @@ object CypherQueries {
     // GraphUnionAll (§2.1) driver-gated: two label-disjoint halves of the
     // customer base re-united; the union's node scan spans both tables
     "c35_graph_union" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, {
-        val g2 = GraftSession(s); g2.enableAutoConsolidation(); g2
-      })
-      val g = graphs.getOrElseUpdate((s, dir + "#union"), {
-        import graft.graph.{NodeTable, PropertyGraph}
-        val cust = s.read.parquet(s"$dir/customer.parquet")
+      val gs = session(s)
+      val g = derive(s, dir, "union") { _ =>
+        import graft.graph.NodeTable
+        val cust = ParquetTables.read(s, s"$dir/customer.parquet")
         def half(pred: org.apache.spark.sql.Column) = {
           val df = cust.where(pred)
             .withColumn("_gid", TpchGraph.tagged(TpchGraph.CUSTOMER,
@@ -343,7 +389,7 @@ object CypherQueries {
             cust.columns.map(c => c -> c).toMap)), Seq.empty, s)
         }
         half(col("c_acctbal") >= 0.0).unionAll(half(col("c_acctbal") < 0.0))
-      })
+      }
       gs.cypher(g,
         """MATCH (c:Customer)
           |RETURN c.c_mktsegment AS seg, count(*) AS n,
@@ -355,10 +401,8 @@ object CypherQueries {
     // the view CONSTRUCTs the high-balance subgraph, the outer query
     // aggregates over it
     "c36_catalog_view" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, {
-        val g2 = GraftSession(s); g2.enableAutoConsolidation(); g2
-      })
-      val g = graphs.getOrElseUpdate((s, dir), TpchGraph.load(s, dir))
+      val gs = session(s)
+      val g = TpchGraph.load(s, dir)
       gs.register("tpch_v", g)
       if (!gs.viewNames.contains("rich")) gs.cypher(
         """CATALOG CREATE VIEW rich($g) {
@@ -379,10 +423,9 @@ object CypherQueries {
     // reference LogicalOptimizer.scala:67-134): the same expand answered
     // from a materialized triplet table — one probe, no rel+node joins
     "c26_triplet" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, GraftSession(s))
-      val g = graphs.getOrElseUpdate((s, dir + "#triplet"),
-        TpchGraph.load(s, dir)
-          .withTriplet("PLACED", Set("Customer"), Set("Order")))
+      val gs = session(s, auto = false)
+      val g = derive(s, dir, "triplet")(
+        _.withTriplet("PLACED", Set("Customer"), Set("Order")))
       gs.cypher(g,
         """MATCH (c:Customer)-[:PLACED]->(o:Order)
           |WHERE o.o_totalprice > 100000.0
@@ -395,10 +438,9 @@ object CypherQueries {
     // start binds Customer + PLACED from ONE materialized scan, saving the
     // src-node join; the Order side joins normally
     "c29_noderel" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, GraftSession(s))
-      val g = graphs.getOrElseUpdate((s, dir + "#noderel"),
-        TpchGraph.load(s, dir)
-          .withNodeRel("IN_NATION", Set("Customer"), nodeOnSrc = true))
+      val gs = session(s, auto = false)
+      val g = derive(s, dir, "noderel")(
+        _.withNodeRel("IN_NATION", Set("Customer"), nodeOnSrc = true))
       gs.cypher(g,
         """MATCH (c:Customer)-[:IN_NATION]->(n:Nation)
           |WHERE c.c_acctbal > 5000.0
@@ -436,8 +478,8 @@ object CypherQueries {
         |ORDER BY nn""".stripMargin)),
     // CONSTRUCT (§2.5): derived graph queried back through the engine
     "c21_construct" -> ((s, dir) => {
-      val gs = sessions.getOrElseUpdate(s, GraftSession(s))
-      val g = graphs.getOrElseUpdate((s, dir), TpchGraph.load(s, dir))
+      val gs = session(s, auto = false)
+      val g = TpchGraph.load(s, dir)
       val derived = gs.cypherGraph(g,
         """MATCH (c:Customer)-[:PLACED]->(o:Order)
           |CONSTRUCT NEW (c)-[:HAS_ORDER {price: o.o_totalprice}]->(o)

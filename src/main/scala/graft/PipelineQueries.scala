@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.pipeline._
+import graft.sources.ParquetTables
 
 /** Training-data pipeline operators as driver-gate queries. Oracles are
   * provided wherever DuckDB can express the same computation; hash-based
@@ -13,9 +14,9 @@ import graft.pipeline._
 object PipelineQueries {
 
   private def docs(s: SparkSession, dir: String) =
-    s.read.parquet(s"$dir/documents.parquet")
+    ParquetTables.read(s, s"$dir/documents.parquet")
   private def emb(s: SparkSession, dir: String) =
-    s.read.parquet(s"$dir/embeddings.parquet")
+    ParquetTables.read(s, s"$dir/embeddings.parquet")
 
   /** Planted ANN ground truth (round 10, the production-config gates).
     * The synthetic embeddings are uniform random, so "recall vs the
@@ -165,7 +166,7 @@ object PipelineQueries {
     * trip) and derive seconds with integer division. */
   private def events(s: SparkSession, dir: String) = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = s.read.parquet(s"$dir/events.parquet")
+    val df = ParquetTables.read(s, s"$dir/events.parquet")
     // Physical ts encoding varies by data generation (int64 nanos read as
     // Long under nanosAsLong, or timestamp[us] read as TIMESTAMP_NTZ).
     // Normalize to epoch-nanos Long: every downstream op (session gaps,
@@ -545,9 +546,9 @@ object PipelineQueries {
     }),
     // sampled two-path skew join — result must be exactly the plain join
     "e6_adaptive_join" -> ((s, dir) => {
-      val li = s.read.parquet(s"$dir/lineitem.parquet")
+      val li = ParquetTables.read(s, s"$dir/lineitem.parquet")
         .select(col("l_suppkey").as("suppkey"), col("l_quantity"))
-      val sup = s.read.parquet(s"$dir/supplier.parquet")
+      val sup = ParquetTables.read(s, s"$dir/supplier.parquet")
         .select(col("s_suppkey").as("suppkey"), col("s_nationkey"))
       graft.operators.SkewJoin
         .adaptiveJoin(li, sup, "suppkey", salts = 8, minShare = 0.001)
@@ -573,7 +574,7 @@ object PipelineQueries {
     // grid-bucketed euclidean distance join: AUTOMOBILE×BUILDING customer
     // points within radius 2 — no cartesian (9-cell neighbor equi-join)
     "e7_distance_join" -> ((s, dir) => {
-      val c = s.read.parquet(s"$dir/customer.parquet")
+      val c = ParquetTables.read(s, s"$dir/customer.parquet")
         .select(col("c_custkey"), col("c_mktsegment"),
           (col("c_acctbal") / 100.0).as("px"),
           ((col("c_custkey") % 1000).cast("double") / 10.0).as("py"))

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.ParquetTables
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -14,7 +15,7 @@ import org.apache.spark.sql.functions._
 object SparkEntry {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    s.read.parquet(s"$dir/$name.parquet")
+    ParquetTables.read(s, s"$dir/$name.parquet")
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0:
     * full Cypher path (parse → plan → DataFrame) with a two-hop expand. */

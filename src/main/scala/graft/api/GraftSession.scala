@@ -26,7 +26,11 @@ class GraftSession(val spark: SparkSession) {
   private val views =
     scala.collection.concurrent.TrieMap.empty[String, (Seq[String], Query)]
 
-  def register(name: String, graph: PropertyGraph): Unit = catalog(name) = graph
+  /** Registers `graph` as `name`. A graph it replaces that no other name
+    * holds is forgotten: see [[forget]]. */
+  def register(name: String, graph: PropertyGraph): Unit = synchronized {
+    catalog.put(name, graph).foreach(old => if (!(old eq graph)) forget(old))
+  }
   def graph(name: String): PropertyGraph = catalog.getOrElse(name,
     throw new IllegalArgumentException(
       s"graph `$name` not in catalog (have: ${catalog.keys.mkString(", ")})"))
@@ -142,6 +146,41 @@ class GraftSession(val spark: SparkSession) {
     skippedShapes.clear()
     autoTableCount.set(0)
   }
+
+  /** Drops what the session keeps for `g` once no catalog name holds it:
+    * its expand-miss counts and size-guard skips, its cached plans and its
+    * adapted twin, whose auto-materialized tables are unpersisted (blocking,
+    * as in [[releaseAutoConsolidation]]) and give back their table slots.
+    * Without this, a graph replaced under its name stays pinned by these
+    * maps and its twin's tables stay cached for the session's lifetime. */
+  private def forget(g: PropertyGraph): Unit = synchronized {
+    if (catalog.values.exists(_ eq g)) return
+    planCache.keySet().removeIf(_._1 eq g)
+    expandMisses.keys.filter(_._1 eq g).foreach(expandMisses.remove)
+    skippedShapes.keys.filter(_._1 eq g).foreach(skippedShapes.remove)
+    adaptedGraphs.remove(g).foreach { twin =>
+      def tables(x: PropertyGraph): Seq[DataFrame] =
+        x.tripletTables.map(_.df) ++ x.nodeRelTables.map(_.df)
+      val auto = tables(twin).filterNot(t => tables(g).exists(_ eq t))
+      // the CacheManager shares one entry between equal plans: keep a
+      // table another held graph (or its twin) still reads
+      val held = (catalog.values ++ adaptedGraphs.values).flatMap(tables)
+      auto.filterNot(t => held.exists(_.queryExecution.analyzed
+          .sameResult(t.queryExecution.analyzed)))
+        .foreach(_.unpersist(blocking = true))
+      autoTableCount.addAndGet(-auto.size)
+    }
+  }
+
+  /** graphs the session keeps consolidation state or cached plans for */
+  private[graft] def heldGraphs: Set[PropertyGraph] = synchronized {
+    import scala.jdk.CollectionConverters._
+    (expandMisses.keys.map(_._1) ++ skippedShapes.keys.map(_._1) ++
+      adaptedGraphs.keys ++ planCache.keySet().asScala.map(_._1)).toSet
+  }
+
+  private[graft] def twinOf(g: PropertyGraph): Option[PropertyGraph] =
+    adaptedGraphs.get(g)
 
   /** the graph queries actually plan against: the adapted twin once
     * consolidation has materialized tables for it. */
@@ -333,7 +372,7 @@ class GraftSession(val spark: SparkSession) {
       case CreateViewStatement(name, ps, inner) =>
         views(name) = (ps, inner); spark.emptyDataFrame
       case DropGraphStatement(name) =>
-        catalog.remove(name); spark.emptyDataFrame
+        synchronized(catalog.remove(name).foreach(forget)); spark.emptyDataFrame
       case DropViewStatement(name) =>
         views.remove(name); spark.emptyDataFrame
     }

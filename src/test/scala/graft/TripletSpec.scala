@@ -369,6 +369,58 @@ class TripletSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(writeThenRead("Carol") === Seq(Seq("Carol", "Aachen")))
   }
 
+  test("re-registering a name forgets the replaced graph and its twin") {
+    def cachedRdds: Set[Int] = spark.sparkContext.getRDDStorageInfo
+      .filter(_.numCachedPartitions > 0).map(_.id).toSet
+    val before = cachedRdds
+    val s = spark
+    import s.implicits._
+    // a graph per round with its own rows, so no two twins share a plan
+    def version(i: Int): PropertyGraph = {
+      val people = (1L to 3L + i).map(k => (k, s"p$k")).toDF("id", "name")
+      val knows = (1L until 3L + i).map(k => (100L + k, k, k + 1)).toDF("rid", "src", "dst")
+      new PropertyGraph(
+        Seq(NodeTable(Set("Person"), people, "id", Map("name" -> "name"))),
+        Seq(RelTable("KNOWS", knows, "rid", "src", "dst", Map.empty)), spark)
+    }
+    val q = """MATCH (a:Person)-[:KNOWS]->(b:Person)
+              |RETURN a.name AS an, b.name AS bn ORDER BY an""".stripMargin
+    val onTwin = """MATCH (x:Person)-[:KNOWS]->(y:Person)
+                   |RETURN x.name AS xn ORDER BY xn""".stripMargin
+    val local = GraftSession(spark)
+    local.enableAutoConsolidation(threshold = 1)
+    try {
+      val rounds = (1 to 5).map { i =>
+        val g = version(i)
+        local.register("g", g)
+        assert(local.cypher("g", q).count() == 2 + i)
+        val twin = local.twinOf(g)
+        assert(twin.exists(_.tripletTables.nonEmpty), "threshold 1 consolidates")
+        // a twin's table is cached once it is read
+        assert(local.cypher(g, onTwin).count() == 2 + i)
+        (g, twin.get)
+      }
+      val (live, liveTwin) = rounds.last
+      assert(local.heldGraphs == Set(live))
+      rounds.init.foreach { case (_, twin) =>
+        twin.tripletTables.foreach(t => assert(t.df.storageLevel ==
+          org.apache.spark.storage.StorageLevel.NONE))
+      }
+      assert(liveTwin.tripletTables.forall(_.df.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE))
+      // only the live twin's table still holds partitions
+      assert((cachedRdds -- before).size == liveTwin.tripletTables.size,
+        s"cached RDDs left behind: ${cachedRdds -- before}")
+      // an equal graph under a new name shares the live twin's cache
+      // entry: replacing it must not uncache the live twin's table
+      local.register("h", version(5))
+      local.cypher("h", q).count()
+      local.register("h", version(4))
+      assert(liveTwin.tripletTables.forall(_.df.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE))
+    } finally local.releaseAutoConsolidation()
+  }
+
   test("pattern tables round-trip through the FS source (round 8)") {
     // build-once-in-a-batch-job deployment shape: unpersisted triplet +
     // node-rel → savePatternTables → fresh session-equivalent load →
